@@ -30,6 +30,7 @@ import os
 import sys
 
 VERSION = "1.0"
+EXTRACT_TIMEOUT_S = 600  # run_extract's wait for the available-now ingest query
 
 
 def load_config(path: str | None) -> dict:
@@ -164,7 +165,12 @@ def run_extract(cfg: dict, year: int, resolver=None) -> int:
         ),
         rdns_max_cache=cfg["dns_cache_size"],
     )
-    q.awaitTermination(600)
+    if not q.awaitTermination(EXTRACT_TIMEOUT_S):
+        # a partial store must not be mirrored and reported as success
+        q.stop()
+        raise TimeoutError(
+            f"extract: ingest query did not finish within {EXTRACT_TIMEOUT_S} s"
+        )
     if os.path.isdir(store) and glob.glob(os.path.join(store, "**", "*.parquet"),
                                           recursive=True):
         ev = spark.read.parquet(store).drop("event_date")

@@ -17,14 +17,23 @@ the Structured Streaming file source + one checkpoint directory:
 Enrichment runs inside ``foreachBatch`` — each micro-batch is a full
 batch DataFrame, so the identical batch pipeline (parse → rDNS → geo)
 is reused unchanged: one code path for batch and streaming.
+
+Each micro-batch is parsed ONCE: the parsed half of the pipeline
+(``plans.pipeline.parse_events``) is persisted before enrichment,
+because the rDNS dim branch (distinct IPs) and the join both consume
+it — left lazy, the batch's files are scanned and regex-parsed twice.
+``persist(MEMORY_AND_DISK)``, not ``localCheckpoint``, so a lost
+executor's cached blocks are recomputed from lineage; the frame is
+unpersisted when the batch ends, whether the write succeeded or not.
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.pipeline import build_events
+from ..plans.pipeline import enrich_events, parse_events
 from ..sources.store import write_events
 
 
@@ -50,11 +59,15 @@ def start_ingest(
     lines = spark.readStream.text(log_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        ev = build_events(
-            batch_df, year, resolver, geo_country, geo_asn,
-            rdns_ttl_seconds=rdns_ttl_seconds, rdns_max_cache=rdns_max_cache,
-        )
-        write_events(ev, store_path, mode="append")
+        parsed = parse_events(batch_df, year).persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            ev = enrich_events(
+                parsed, resolver, geo_country, geo_asn,
+                rdns_ttl_seconds=rdns_ttl_seconds, rdns_max_cache=rdns_max_cache,
+            )
+            write_events(ev, store_path, mode="append")
+        finally:
+            parsed.unpersist()
 
     writer = lines.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint_dir

@@ -3,6 +3,8 @@
 import os
 import sqlite3
 
+import pytest
+
 from maillogsentinel_spark import app
 
 LINE = ("Aug 12 06:57:{s:02d} srv1 postfix/smtps/smtpd[1]: warning: "
@@ -69,6 +71,48 @@ def test_cli_reset_archives_data(spark, tmp_path, capsys, monkeypatch):
     archive = capsys.readouterr().out.strip()
     assert not (wd / "store").exists()
     assert os.path.isdir(archive) and os.path.isdir(os.path.join(archive, "store"))
+
+
+def test_extract_timeout_raises_without_csv_mirror(spark, tmp_path, monkeypatch):
+    """An ingest query still running at the timeout must fail the extract:
+    no CSV mirror rewritten over a possibly partial store, no exit 0."""
+    from maillogsentinel_spark.streaming import ingest
+
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    (logs / "mail.log").write_text("".join(LINE.format(s=i, o=i) for i in range(3)))
+    wd = tmp_path / "work"
+    ini = tmp_path / "mls.conf"
+    ini.write_text(f"[paths]\nworking_dir = {wd}\nmail_log = {logs}/mail.log\n")
+
+    real_start = ingest.start_ingest
+    stopped = []
+
+    class TimedOut:
+        """The real query, reporting a timeout once it has written."""
+
+        def __init__(self, q):
+            self.q = q
+
+        def awaitTermination(self, timeout=None):
+            self.q.awaitTermination(120)
+            return False
+
+        def stop(self):
+            stopped.append(True)
+            self.q.stop()
+
+    monkeypatch.setattr(
+        ingest, "start_ingest", lambda *a, **kw: TimedOut(real_start(*a, **kw))
+    )
+    monkeypatch.setattr(app, "_spark", lambda cfg: spark)
+    cfg = app.load_config(str(ini))
+    with pytest.raises(TimeoutError):
+        app.run_extract(cfg, year=2025, resolver=lambda ip: ("h", None))
+    assert stopped == [True]
+    # the store has rows, so only the timeout check kept the mirror away
+    assert spark.read.parquet(str(wd / "store")).count() == 3
+    assert not (wd / (cfg["csv_filename"] + ".d")).exists()
 
 
 def test_ini_operational_knobs(tmp_path):

@@ -170,6 +170,10 @@ def test_median_mad_matches_two_pass_scaffold(spark):
     rows += [("d", 5.0) for _ in range(50)]
     # group e: single row
     rows += [("e", 42.0)]
+    # group f: large, LEFT-skewed (negated exponential) — the long tail
+    # sits below the median, so the MAD window's upper bound must come
+    # from the outer .24 fraction, not the inner .40 one
+    rows += [("f", -rnd.expovariate(0.3)) for _ in range(3000)]
     df = spark.createDataFrame(rows, "g string, v double")
 
     fused = {

@@ -8,14 +8,20 @@ import os
 import tempfile
 import uuid
 
+import pytest
+
 # fixed path: workers re-import this module, so mkdtemp would differ per process
 CALL_DIR = os.path.join(tempfile.gettempdir(), "mls-rdns-call-log")
 os.makedirs(CALL_DIR, exist_ok=True)
 
 
 def fake_resolver(ip):
-    # side-channel call log that survives the worker-process boundary
-    open(os.path.join(CALL_DIR, f"{ip}-{uuid.uuid4().hex}"), "w").close()
+    # side-channel call log that survives the worker-process boundary:
+    # one file per call, named <ip>-<partition id>-<unique>
+    from pyspark import TaskContext
+
+    pid = TaskContext.get().partitionId()
+    open(os.path.join(CALL_DIR, f"{ip}-{pid}-{uuid.uuid4().hex}"), "w").close()
     last = int(ip.rsplit(".", 1)[1])
     if last % 3 == 0:
         return None, "Timeout"
@@ -24,9 +30,22 @@ def fake_resolver(ip):
     return None, "ERRNO 1"
 
 
-def test_enrich_with_callable(spark):
+def _reset_calls():
     for f in os.listdir(CALL_DIR):
         os.unlink(os.path.join(CALL_DIR, f))
+
+
+def _calls():
+    """[(ip, partition id)] of every resolver call since the reset."""
+    out = []
+    for f in os.listdir(CALL_DIR):
+        ip, pid, _ = f.split("-")
+        out.append((ip, int(pid)))
+    return out
+
+
+def test_enrich_with_callable(spark):
+    _reset_calls()
     df = spark.createDataFrame(
         [("1.1.1.1",), ("1.1.1.1",), ("2.2.2.2",), ("3.3.3.3",)], ["ip"]
     )
@@ -38,8 +57,26 @@ def test_enrich_with_callable(spark):
     assert out["3.3.3.3"]["hostname"] == "null"
     assert out["3.3.3.3"]["reverse_dns_status"] == "Timeout"
     # distinct projection: duplicate 1.1.1.1 resolved once
-    calls = sorted(f.rsplit("-", 1)[0] for f in os.listdir(CALL_DIR))
+    calls = sorted(ip for ip, _ in _calls())
     assert calls == ["1.1.1.1", "2.2.2.2", "3.3.3.3"]
+
+
+def test_resolver_runs_once_per_ip_on_every_core(spark):
+    """The resolver stage is latency-bound and its input tiny, so it must
+    not collapse to one task: the distinct IPs are hash-partitioned over
+    defaultParallelism partitions, and each is still resolved once."""
+    from maillogsentinel_spark.operators.rdns import resolve_distinct_ips
+
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("needs local[n] with n >= 2")
+    _reset_calls()
+    ips = [f"10.0.{i // 8}.{i}" for i in range(64)]
+    df = spark.createDataFrame([(ip,) for ip in ips * 5], ["ip"])
+    out = resolve_distinct_ips(df, fake_resolver, ttl_seconds=0).collect()
+    assert sorted(r["ip"] for r in out) == sorted(ips)
+    calls = _calls()
+    assert sorted(ip for ip, _ in calls) == sorted(ips)
+    assert len({pid for _, pid in calls}) >= 2
 
 
 def test_enrich_with_table(spark):

@@ -46,6 +46,44 @@ def test_ingest_exactly_once(spark, tmp_path):
     assert os.path.isdir(ckpt)
 
 
+def _host_resolver(ip):
+    last = int(ip.rsplit(".", 1)[1])
+    return (f"h{last}.example.net", None) if last % 2 else (None, "ERRNO 1")
+
+
+def test_ingest_parses_once_and_matches_batch_pipeline(spark, tmp_path):
+    """Each micro-batch's parsed frame is persisted for the rDNS branch
+    and the join, and released when the batch ends; the store holds
+    exactly what the batch pipeline writes for the same lines."""
+    from maillogsentinel_spark.plans.pipeline import build_events
+    from maillogsentinel_spark.sources.store import write_events
+
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    text = "".join(
+        f"Sep {28 + i % 2} 0{i % 10}:00:{i % 60:02d} srv postfix/smtpd[{i}]: "
+        f"warning: unknown[10.1.{i % 7}.{i % 23}]: SASL LOGIN authentication "
+        f"failed: x, sasl_username=u{i % 5}\n"
+        + f"Sep 28 03:00:00 srv postfix/qmgr[9]: {i:06X}: removed\n"
+        for i in range(120)
+    )
+    (logs / "mail.log").write_text(text)
+    store, ref = str(tmp_path / "store"), str(tmp_path / "ref")
+
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    q = start_ingest(spark, str(logs), store, str(tmp_path / "ckpt"), 2025,
+                     _host_resolver)
+    assert q.awaitTermination(120)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= before
+
+    lines = spark.read.text(str(logs))
+    write_events(build_events(lines, 2025, _host_resolver), ref)
+    got = sorted(spark.read.parquet(store).collect())
+    want = sorted(spark.read.parquet(ref).collect())
+    assert len(want) == 120
+    assert got == want
+
+
 def test_streaming_windowed_agg(spark, tmp_path):
     logs = tmp_path / "logs"
     logs.mkdir()
