@@ -10,7 +10,10 @@ generation) is an explicit non-goal (SURVEY §7).
 
 What replaces what:
 - byte-offset state files → one Structured Streaming checkpoint under
-  ``working_dir/checkpoint`` (exactly-once, rotation-safe);
+  ``working_dir/checkpoint`` (rotation-safe; source offsets are tracked
+  exactly once, but the store append is at-least-once: a crash between
+  the append and the checkpoint commit re-appends that batch —
+  ``streaming.ingest.start_tx_store_sink`` is the exactly-once store);
 - the growing report-bottleneck CSV → a date-partitioned Parquet store
   (the CSV is still emitted for byte-compat consumers);
 - `--report` reads one day's partition (partition pruning), not the
@@ -132,10 +135,8 @@ def _spark(cfg: dict):
 def run_extract(cfg: dict, year: int, resolver=None) -> int:
     """Default mode: incremental ingest of the mail-log directory into
     the Parquet store + byte-compat CSV mirror."""
-    from .plans.pipeline import build_events
     from .sources.dims import load_geo_asn, load_geo_country
-    from .sources.logs import read_logs
-    from .sources.store import write_events, write_events_csv
+    from .sources.store import read_events, write_events_csv
     from .streaming.ingest import start_ingest
 
     spark = _spark(cfg)
@@ -173,8 +174,10 @@ def run_extract(cfg: dict, year: int, resolver=None) -> int:
         )
     if os.path.isdir(store) and glob.glob(os.path.join(store, "**", "*.parquet"),
                                           recursive=True):
-        ev = spark.read.parquet(store).drop("event_date")
-        write_events_csv(ev, os.path.join(wd, cfg["csv_filename"] + ".d"))
+        write_events_csv(
+            read_events(spark, store),
+            os.path.join(wd, cfg["csv_filename"] + ".d"),
+        )
     return 0
 
 
@@ -182,10 +185,10 @@ def run_report(cfg: dict, date_s: str, send: bool = False) -> int:
     """--report: aggregate one day from the store, render the
     reference-format text; optionally email it."""
     from .report import daily_report_stats, render_report
+    from .sources.store import read_events
 
     spark = _spark(cfg)
-    store = os.path.join(cfg["working_dir"], "store")
-    ev = spark.read.parquet(store).drop("event_date")
+    ev = read_events(spark, os.path.join(cfg["working_dir"], "store"))
     stats = daily_report_stats(ev, date_s)
     txt = render_report(stats, date_s, server_name=os.uname().nodename)
     print(txt)
@@ -210,21 +213,13 @@ def run_sql_export(cfg: dict, out_dir: str | None = None) -> int:
     (byte-compat S8 shape, timestamped filename). Rows failing NOT-NULL
     casts are quarantined, not silently skipped (documented divergence
     from the reference's offset-advance-past-errors)."""
-    from pyspark.sql import functions as F
-
-    from .schemas import MAIL_CSV_COLUMNS
     from .sources.sqlio import cast_with_mapping, insert_statements, load_mapping
+    from .sources.store import csv_shape, read_events
 
     spark = _spark(cfg)
-    store = os.path.join(cfg["working_dir"], "store")
-    ev = spark.read.parquet(store).drop("event_date")
-    csv_shape = ev.select(
-        F.col("server"),
-        F.date_format("ts", "dd/MM/yyyy HH:mm").alias("date"),
-        *[F.col(c) for c in MAIL_CSV_COLUMNS[2:]],
-    )
+    ev = read_events(spark, os.path.join(cfg["working_dir"], "store"))
     specs = load_mapping(cfg["column_mapping_file"] or _default_mapping())
-    good, quarantined = cast_with_mapping(csv_shape, specs)
+    good, quarantined = cast_with_mapping(csv_shape(ev), specs)
     text = insert_statements(good, cfg["table_name"], specs)
     out_dir = out_dir or os.path.join(cfg["working_dir"], "sql_export")
     os.makedirs(out_dir, exist_ok=True)

@@ -30,9 +30,3 @@ def hash64(col: Column, salt: str | None = None) -> Column:
     s = F.concat(F.lit(salt + "\x1f"), col) if salt is not None else col
     return F.conv(F.substring(F.md5(s), 1, hash64_hex_width), 16, 10).cast("long")
 
-
-def duckdb_hash64(expr: str, salt: str | None = None) -> str:
-    """The DuckDB SQL text computing the same value as :func:`hash64`."""
-    if salt is not None:
-        expr = f"concat('{salt}' || chr(31), {expr})"
-    return f"CAST('0x' || substr(md5({expr}), 1, {hash64_hex_width}) AS BIGINT)"

@@ -122,10 +122,6 @@ def _fdct(block: np.ndarray) -> np.ndarray:
     return _C @ block @ _C.T
 
 
-def _idct(coef: np.ndarray) -> np.ndarray:
-    return _C.T @ coef @ _C
-
-
 # ---------------------------------------------------------------------------
 # bit IO with 0xFF byte stuffing
 # ---------------------------------------------------------------------------

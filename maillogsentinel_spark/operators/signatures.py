@@ -24,17 +24,6 @@ from pyspark.sql import functions as F
 from ..functions.hashing import hash64
 
 
-def _py_hash64(data: bytes) -> int:
-    """Python twin of functions.hashing.hash64 (no salt): first
-    ``hash64_hex_width`` hex chars of md5, as int — bit-identical to
-    the Spark expression and the DuckDB SQL."""
-    import hashlib
-
-    from ..functions.hashing import hash64_hex_width
-
-    return int(hashlib.md5(data).hexdigest()[:hash64_hex_width], 16)
-
-
 def _spread(narrow: "DataFrame") -> "DataFrame":
     """Gated round-robin repartition for the Arrow signature passes:
     their per-row work (one md5 per token, numpy vote folds) sits

@@ -7558,73 +7558,13 @@ FROM final GROUP BY 1 ORDER BY 1
 """
 
 
-@query("store_maintenance_roundtrip", oracle=_STORE_RT_ORACLE)
-def q_store_maintenance_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The maintenance surface (sources/store.py) driven END-TO-END and
-    ORACLE-PINNED: build a day-partitioned store from `events`, MERGE an
-    update batch that deliberately carries DUPLICATE keys (a losing row
-    at the original ts plus a winning row one hour later — MERGE must
-    collapse to the max-ts winner, one row per key) and brand-new keys
-    (the insert path), then run small-file compaction selected by a
-    NON-partition predicate (which must be layout-only — it chooses
-    which days to rewrite, never which rows survive). The DuckDB oracle
-    re-derives the same final store state relationally (anti-join +
-    deduped union), so a dup-key double-insert, a predicate that
-    filters rows, a lost partition, or a stale moved-day file each
-    flips a per-day count/sum and fails the hash — this is the graded
-    gate the round-5 maintenance defects would have tripped.
-
-    Scale shape: the store writes are day-partitioned dynamic
-    overwrites touching only update-batch days; the MERGE anti-join
-    broadcasts the update keys; compaction range-partitions by
-    (day, salt). The final per-day census is one keyed agg with exact
-    decimal value sums (the float-parity rule). The temp store lives
-    under driver-local tmp here (correct in local mode and for the
-    oracle contract); on a real cluster the SAME operators take any
-    shared-storage (HCFS) path — the location is a parameter, not an
-    assumption."""
-    import shutil
-    import tempfile
-
-    from ..sources.store import compact_partitions, upsert_events, write_events
-
-    # day <= 14: days 1-10 take the MERGE (insert spillover lands on
-    # day 11), days 12-14 stay cold — the untouched-partition evidence
-    # the census hash pins — at half the 31-day fixture build cost
-    ev = _t(spark, sf_dir, "events", repartition=False).select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    ).where(F.dayofmonth("ts") <= 14)
-    tmp = tempfile.mkdtemp(prefix="mls_store_rt_", dir=_scratch_dir())
-    try:
-        # scope shuffle width to the state size (a few thousand rows per
-        # day): every maintenance write here is otherwise 32 tasks ×
-        # ~31 day directories of near-empty files — same knob and same
-        # reasoning as the streaming replays' _stream_state_parts
-        with _stream_state_parts(spark, 8):
-            return _store_roundtrip_body(spark, ev, f"{tmp}/store")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _store_roundtrip_body(spark: SparkSession, ev: DataFrame, path: str) -> DataFrame:
-    from ..sources.store import compact_partitions, upsert_events, write_events
-
-    # cluster by day before the partitioned write: without it every
-    # input split emits a file into every day directory (splits × days
-    # tiny files), and the whole roundtrip pays that file count three
-    # more times (upsert read, overwrite, compaction read)
-    write_events(ev.repartition(F.to_date("ts")), path, mode="overwrite")
-    # update batch scoped to the month's first 10 days: a partition-
-    # scoped MERGE is only evidenced when most days stay untouched (the
-    # final census still covers every day, so a wrongly-rewritten or
-    # dropped cold partition fails the hash) — and it keeps the
-    # per-write job fan-out to ~11 day directories instead of all ~31
-    upd_base = ev.where(
-        (F.col("event_id") % 10 == 0) & (F.dayofmonth("ts") <= 10)
-    )
+def _store_rt_updates(upd_base: DataFrame, ev: DataFrame) -> DataFrame:
+    """The roundtrips' MERGE batch: per `upd_base` key a losing row at
+    the original ts (so the loser's day always covers the old row) and
+    a winning row one hour later, plus brand-new keys one day on."""
     loser = upd_base.select(
         "event_id",
-        "ts",  # original ts: the loser's day always covers the old row
+        "ts",
         "user_id",
         F.lit("upd_lose").alias("event_type"),
         (F.col("value") + 1000).alias("value"),
@@ -7645,144 +7585,64 @@ def _store_roundtrip_body(spark: SparkSession, ev: DataFrame, path: str) -> Data
         F.lit("ins").alias("event_type"),
         "value",
     )
-    updates = loser.unionByName(winner).unionByName(inserts)
-    upsert_events(spark, path, updates)
-    compact_partitions(
-        spark, path, target_files_per_day=1,
-        predicate="event_type = 'upd_win'",
-    )
-    agg = (
-        spark.read.parquet(path)
-        .groupBy("event_date")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.countDistinct("event_id").alias("n_keys"),
-            F.sum(
-                F.when(F.col("event_type") == "upd_win", 1).otherwise(0)
-            ).cast("long").alias("n_upd"),
-            F.sum(
-                F.when(F.col("event_type") == "upd_lose", 1).otherwise(0)
-            ).cast("long").alias("n_lose"),
-            F.sum("event_id").cast("long").alias("sum_eid"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(21,6)")).cast("double"),
-                4,
-            ).alias("value_sum"),
-        )
-        .orderBy("event_date")
-    )
-    # materialize before the temp store is removed (the returned frame
-    # must not depend on the deleted path)
-    rows = agg.collect()
-    return spark.createDataFrame(rows, agg.schema)
+    return loser.unionByName(winner).unionByName(inserts)
 
 
-@query("store_tx_roundtrip", oracle=_STORE_RT_ORACLE)
-def q_store_tx_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The TRANSACTIONAL store (sources/txstore.py) driven end-to-end
-    and oracle-pinned — the manifest-swap commit protocol under the
-    exact same MERGE/compaction contract as `store_maintenance_
-    roundtrip` (same oracle), plus the one thing the raw store cannot
-    promise: between the initial snapshot and the real MERGE, a POISON
-    transaction (every touched row's value shifted, event_type
-    'poison') is started and CRASHED at the pre-commit fault point.
-    Its data files are fully staged and published into the data layout
-    — only the manifest rename never happens. If readers resolved
-    state from directory listings (the raw store's failure mode) the
-    poison rows would flip every per-day count and the value hash; the
-    manifest-scoped read keeps the snapshot exact. A vacuum then
-    removes the orphans and the re-read must still hash identically.
+def _store_rt(
+    spark: SparkSession,
+    sf_dir: str,
+    prefix: str,
+    before_merge: Callable[[str, DataFrame], None] | None = None,
+    before_read: Callable[[str], None] | None = None,
+) -> DataFrame:
+    """Shared body of the store roundtrips (one oracle): snapshot
+    `events` days 1-14 into a tx store, MERGE `_store_rt_updates`,
+    compact the days a non-partition predicate selects, and return the
+    per-day census. `before_merge(path, upd_base)` and
+    `before_read(path)` are the hooks a roundtrip adds steps through.
 
-    Scale shape: upsert/compaction read ONLY touched days' files
-    straight from the manifest (file-list pruning, no directory
-    listing); the commit is ONE metadata rename regardless of how many
-    day partitions the MERGE touched. Store base path defaults to
-    driver-local tmp for the oracle contract; on a real cluster pass
-    shared storage (any HCFS URI) — the operators take arbitrary
-    paths."""
+    Days 1-10 take the MERGE (insert spillover lands on day 11) and
+    days 12-14 stay cold — the untouched-partition evidence the census
+    hash pins — at half the 31-day fixture build cost. The temp store
+    lives under driver-local tmp here (correct in local mode and for
+    the oracle contract); on a real cluster the SAME operators take any
+    shared-storage (HCFS) path."""
     import shutil
     import tempfile
 
-    from ..sources import txstore
     from ..sources.txstore import (
         tx_compact_partitions,
-        tx_current_version,
         tx_read_events,
         tx_upsert_events,
-        tx_vacuum,
         tx_write_events,
     )
 
-    # same day <= 14 base as store_maintenance_roundtrip (shared oracle)
     ev = _t(spark, sf_dir, "events", repartition=False).select(
         "event_id", "ts", "user_id", "event_type", "value"
     ).where(F.dayofmonth("ts") <= 14)
-    tmp = tempfile.mkdtemp(prefix="mls_store_tx_", dir=_scratch_dir())
+    upd_base = ev.where(
+        (F.col("event_id") % 10 == 0) & (F.dayofmonth("ts") <= 10)
+    )
+    tmp = tempfile.mkdtemp(prefix=prefix, dir=_scratch_dir())
     path = f"{tmp}/store"
     try:
+        # scope shuffle width to the state size (a few thousand rows per
+        # day): every maintenance write here is otherwise 32 tasks of
+        # near-empty files — same knob and same reasoning as the
+        # streaming replays' _stream_state_parts
         with _stream_state_parts(spark, 8):
+            # cluster by day before the write: without it every input
+            # split emits a file into every day directory
             tx_write_events(spark, path, ev.repartition(F.to_date("ts")))
-            upd_base = ev.where(
-                (F.col("event_id") % 10 == 0) & (F.dayofmonth("ts") <= 10)
-            )
-            # aborted poison transaction: staged AND published, never
-            # committed — the crash-injection seam fires after the
-            # manifest temp write, before the atomic rename
-            poison = upd_base.select(
-                "event_id", "ts", "user_id",
-                F.lit("poison").alias("event_type"),
-                (F.col("value") + 9999).alias("value"),
-            )
-            orig_fault = txstore._fault
-
-            def _boom(point: str) -> None:
-                if point == "pre-commit":
-                    raise RuntimeError("injected crash")
-
-            txstore._fault = _boom
-            try:
-                tx_upsert_events(spark, path, poison)
-                raise AssertionError("poison transaction must not commit")
-            except RuntimeError:
-                pass
-            finally:
-                txstore._fault = orig_fault
-            if tx_current_version(spark, path) != 1:  # survives python -O
-                raise RuntimeError("aborted txn must not advance version")
-            # the real MERGE (same batch construction as the raw
-            # roundtrip so the shared oracle closes over it)
-            loser = upd_base.select(
-                "event_id", "ts", "user_id",
-                F.lit("upd_lose").alias("event_type"),
-                (F.col("value") + 1000).alias("value"),
-            )
-            winner = upd_base.select(
-                "event_id",
-                (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("ts"),
-                "user_id",
-                F.lit("upd_win").alias("event_type"),
-                (F.col("value") + 2000).alias("value"),
-            )
-            inserts = ev.where(
-                (F.col("event_id") % 97 == 3) & (F.dayofmonth("ts") <= 10)
-            ).select(
-                (F.col("event_id") + 10_000_000).alias("event_id"),
-                (F.col("ts") + F.expr("INTERVAL 1 DAY")).alias("ts"),
-                "user_id",
-                F.lit("ins").alias("event_type"),
-                "value",
-            )
-            tx_upsert_events(
-                spark, path, loser.unionByName(winner).unionByName(inserts)
-            )
+            if before_merge is not None:
+                before_merge(path, upd_base)
+            tx_upsert_events(spark, path, _store_rt_updates(upd_base, ev))
             tx_compact_partitions(
                 spark, path, target_files_per_day=1,
                 predicate="event_type = 'upd_win'",
             )
-            # retention_ms=0: no writer is in flight here (single
-            # process); the default 10-min age gate would skip the
-            # seconds-old poison orphans this query exists to sweep
-            tx_vacuum(spark, path, keep_versions=1, retention_ms=0)
+            if before_read is not None:
+                before_read(path)
             agg = (
                 tx_read_events(spark, path)
                 .groupBy("event_date")
@@ -7803,10 +7663,87 @@ def q_store_tx_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .orderBy("event_date")
             )
+            # materialize before the temp store is removed (the returned
+            # frame must not depend on the deleted path)
             rows = agg.collect()
             return spark.createDataFrame(rows, agg.schema)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+@query("store_maintenance_roundtrip", oracle=_STORE_RT_ORACLE)
+def q_store_maintenance_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The maintenance surface (the ``tx_*`` operations of
+    sources/txstore.py) driven END-TO-END and ORACLE-PINNED: build a
+    day-partitioned store from `events`, MERGE an update batch that
+    deliberately carries DUPLICATE keys (a losing row at the original
+    ts plus a winning row one hour later — MERGE must collapse to the
+    max-ts winner, one row per key) and brand-new keys (the insert
+    path), then run small-file compaction selected by a NON-partition
+    predicate (which must be layout-only — it chooses which days to
+    rewrite, never which rows survive). The DuckDB oracle re-derives
+    the same final store state relationally (anti-join + deduped
+    union), so a dup-key double-insert, a predicate that filters rows,
+    a lost partition, or a stale moved-day file each flips a per-day
+    count/sum and fails the hash.
+
+    Scale shape: upsert and compaction read only the touched days'
+    files from the manifest; the MERGE anti-join broadcasts the update
+    keys; compaction range-partitions by (day, salt). The final per-day
+    census is one keyed agg with exact decimal value sums (the
+    float-parity rule)."""
+    return _store_rt(spark, sf_dir, "mls_store_rt_")
+
+
+@query("store_tx_roundtrip", oracle=_STORE_RT_ORACLE)
+def q_store_tx_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`store_maintenance_roundtrip` (same oracle) plus the crash
+    contract of the manifest-swap commit: between the initial snapshot
+    and the real MERGE, a POISON transaction (every touched row's value
+    shifted, event_type 'poison') is started and CRASHED at the
+    pre-commit fault point. Its data files are fully staged and
+    published into the data layout — only the manifest rename never
+    happens. If readers resolved state from directory listings the
+    poison rows would flip every per-day count and the value hash; the
+    manifest-scoped read keeps the snapshot exact. A vacuum then
+    removes the orphans before the census read, which must still hash
+    identically."""
+    from ..sources import txstore
+    from ..sources.txstore import tx_current_version, tx_upsert_events, tx_vacuum
+
+    def crash_poison(path: str, upd_base: DataFrame) -> None:
+        poison = upd_base.select(
+            "event_id", "ts", "user_id",
+            F.lit("poison").alias("event_type"),
+            (F.col("value") + 9999).alias("value"),
+        )
+        orig_fault = txstore._fault
+
+        def _boom(point: str) -> None:
+            if point == "pre-commit":
+                raise RuntimeError("injected crash")
+
+        txstore._fault = _boom
+        try:
+            tx_upsert_events(spark, path, poison)
+            raise AssertionError("poison transaction must not commit")
+        except RuntimeError:
+            pass
+        finally:
+            txstore._fault = orig_fault
+        if tx_current_version(spark, path) != 1:  # survives python -O
+            raise RuntimeError("aborted txn must not advance version")
+
+    def vacuum(path: str) -> None:
+        # retention_ms=0: no writer is in flight here (single process);
+        # the default 10-min age gate would skip the seconds-old poison
+        # orphans this query exists to sweep
+        tx_vacuum(spark, path, keep_versions=1, retention_ms=0)
+
+    return _store_rt(
+        spark, sf_dir, "mls_store_tx_",
+        before_merge=crash_poison, before_read=vacuum,
+    )
 
 
 _TX_TT_ORACLE = """

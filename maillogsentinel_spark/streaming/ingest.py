@@ -7,12 +7,18 @@ bin/maillogsentinel.py:643). All of that state machinery is replaced by
 the Structured Streaming file source + one checkpoint directory:
 
 - new log lines → the source picks up appended *files*; a rotated file
-  is just a new file name, processed exactly once (strictly better than
-  the reference's reset-to-zero heuristic, which can re-read);
-- exactly-once: file-source tracking lives in the checkpoint; the
-  reference's separate offset/state files and its documented
-  at-least-once divergence (sql_exporter.py:621-630 advances the offset
-  past failed rows) disappear.
+  is just a new file name, picked up once by the source (strictly
+  better than the reference's reset-to-zero heuristic, which can
+  re-read);
+- the file source's offsets are tracked exactly once in the
+  checkpoint; the reference's separate offset/state files and its
+  documented at-least-once divergence (sql_exporter.py:621-630 advances
+  the offset past failed rows) disappear;
+- the store write is at-least-once: ``start_ingest`` appends plain
+  parquet (``write_events(mode="append")``) inside ``foreachBatch``, so
+  a crash between that append and the checkpoint commit re-appends the
+  batch on restart. ``start_tx_store_sink`` is the exactly-once store
+  sink (its batch ledger commits with the data).
 
 Enrichment runs inside ``foreachBatch`` — each micro-batch is a full
 batch DataFrame, so the identical batch pipeline (parse → rDNS → geo)
@@ -34,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.pipeline import enrich_events, parse_events
-from ..sources.store import write_events
+from ..sources.store import csv_shape, write_events
 
 
 def start_ingest(
@@ -136,17 +142,7 @@ def start_sql_export(
         list(MAIL_EVENTS_SCHEMA.fields) + [StructField("event_date", DateType())]
     )
     src = spark.readStream.schema(schema).parquet(store_path)
-    csv_shaped = src.select(
-        "server",
-        F.date_format("ts", "dd/MM/yyyy HH:mm").alias("date"),
-        "ip",
-        "user",
-        "hostname",
-        "reverse_dns_status",
-        "country_code",
-        "asn",
-        "aso",
-    )
+    csv_shaped = csv_shape(src)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         good, quarantine = cast_with_mapping(batch_df, specs)

@@ -1,23 +1,32 @@
-"""Store maintenance: partition-scoped upsert (MERGE) and small-file
-compaction over the day-partitioned events store (sources/store.py).
+"""Store maintenance: partition-scoped upsert (MERGE), small-file
+compaction and Z-order over the day-partitioned events store, all
+through the transactional ``tx_*`` operations (sources/txstore.py) —
+the store's only rewrite path.
 
 The contract under test is the 100 TB one: only TOUCHED day partitions
-are rewritten — untouched days' files must survive byte-identical —
-and the merged data always round-trips exactly.
+are rewritten — untouched days keep the same physical files — and the
+merged data always round-trips exactly. These are the edge-case inputs
+(empty batches, keys moving across days, map columns, day splits);
+the commit protocol itself (crash injection, concurrency, vacuum) is
+pinned in test_txstore.py.
 """
 
 from __future__ import annotations
 
 import datetime
-import glob
 import os
 
 from pyspark.sql import Row, functions as F
 
-from maillogsentinel_spark.sources.store import (
-    compact_partitions,
-    upsert_events,
-    write_events,
+from maillogsentinel_spark.sources import txstore
+from maillogsentinel_spark.sources.txstore import (
+    tx_append_events,
+    tx_compact_partitions,
+    tx_current_version,
+    tx_optimize_zorder,
+    tx_read_events,
+    tx_upsert_events,
+    tx_write_events,
 )
 
 
@@ -37,93 +46,87 @@ def _store(spark, tmp_path):
         [_ev(1, 1, 10, 1.0), _ev(2, 1, 11, 2.0), _ev(3, 2, 10, 3.0),
          _ev(4, 3, 12, 4.0)]
     )
-    write_events(base, path, mode="overwrite")
+    tx_write_events(spark, path, base)
     return path
 
 
-def _files_for_day(path, day):
-    return sorted(
-        glob.glob(os.path.join(path, f"event_date=2025-03-0{day}", "*.parquet"))
-    )
+def _files_for_day(spark, path, day):
+    """Absolute data files the live manifest lists for 2025-03-<day>."""
+    rels = txstore._load_manifest(spark, path)["files"].get(f"2025-03-0{day}", [])
+    return sorted(os.path.join(path, "data", r) for r in rels)
+
+
+def _stamped(files):
+    return [(f, os.path.getmtime(f), os.path.getsize(f)) for f in files]
+
+
+def _id_values(spark, path):
+    return {(r["event_id"], r["value"]) for r in tx_read_events(spark, path).collect()}
+
+
+def _fragmented(spark, path, day_rows):
+    """One commit per row: the file-per-micro-batch shape compaction
+    exists to undo."""
+    tx_write_events(spark, path, spark.createDataFrame(day_rows[:1]))
+    for r in day_rows[1:]:
+        tx_append_events(spark, path, spark.createDataFrame([r]))
 
 
 def test_upsert_rewrites_only_touched_days(spark, tmp_path):
     path = _store(spark, tmp_path)
-    day3_before = [(f, os.path.getmtime(f), os.path.getsize(f))
-                   for f in _files_for_day(path, 3)]
+    day3_before = _stamped(_files_for_day(spark, path, 3))
+    day1_before = _files_for_day(spark, path, 1)
     assert day3_before
 
     # update event 2 (day 1) and insert event 5 (new, day 2)
     updates = spark.createDataFrame([_ev(2, 1, 11, 20.0), _ev(5, 2, 13, 5.0)])
-    n = upsert_events(spark, path, updates)
-    assert n == 2  # days 1 and 2 rewritten
+    assert tx_upsert_events(spark, path, updates) == 2  # committed version
 
-    got = {
-        (r["event_id"], r["value"])
-        for r in spark.read.parquet(path).collect()
+    assert _id_values(spark, path) == {
+        (1, 1.0), (2, 20.0), (3, 3.0), (4, 4.0), (5, 5.0)
     }
-    assert got == {(1, 1.0), (2, 20.0), (3, 3.0), (4, 4.0), (5, 5.0)}
-
+    assert _files_for_day(spark, path, 1) != day1_before  # rewritten
     # day 3 untouched: same files, same mtimes, same sizes
-    day3_after = [(f, os.path.getmtime(f), os.path.getsize(f))
-                  for f in _files_for_day(path, 3)]
-    assert day3_after == day3_before
+    assert _stamped(_files_for_day(spark, path, 3)) == day3_before
 
 
 def test_upsert_empty_batch_is_noop(spark, tmp_path):
     path = _store(spark, tmp_path)
-    empty = spark.createDataFrame([], spark.read.parquet(path).drop(
-        "event_date").schema)
-    assert upsert_events(spark, path, empty) == 0
-    assert spark.read.parquet(path).count() == 4
+    empty = spark.createDataFrame([], tx_read_events(spark, path).schema)
+    assert tx_upsert_events(spark, path, empty) == 1  # nothing committed
+    assert tx_current_version(spark, path) == 1
+    assert tx_read_events(spark, path).count() == 4
 
 
 def test_compaction_reduces_files_and_preserves_rows(spark, tmp_path):
     path = str(tmp_path / "store")
-    # simulate many micro-batch appends into one day
-    for i in range(5):
-        write_events(
-            spark.createDataFrame([_ev(100 + i, 1, 10, float(i))]), path
-        )
-    write_events(spark.createDataFrame([_ev(200, 2, 11, 9.0)]), path)
-    assert len(_files_for_day(path, 1)) >= 5
-    before = {
-        (r["event_id"], r["value"])
-        for r in spark.read.parquet(path).collect()
-    }
+    _fragmented(spark, path, [_ev(100 + i, 1, 10, float(i)) for i in range(5)]
+                + [_ev(200, 2, 11, 9.0)])
+    assert len(_files_for_day(spark, path, 1)) >= 5
+    before = _id_values(spark, path)
 
-    n = compact_partitions(spark, path, target_files_per_day=1)
-    assert n == 2
-    assert len(_files_for_day(path, 1)) == 1
-    after = {
-        (r["event_id"], r["value"])
-        for r in spark.read.parquet(path).collect()
-    }
-    assert after == before
+    tx_compact_partitions(spark, path, target_files_per_day=1)
+    assert len(_files_for_day(spark, path, 1)) == 1
+    assert _id_values(spark, path) == before
 
 
 def test_compaction_predicate_scopes_rewrite(spark, tmp_path):
     path = str(tmp_path / "store")
-    for i in range(3):
-        write_events(
-            spark.createDataFrame([_ev(300 + i, 1, 10, float(i))]), path
-        )
-    write_events(spark.createDataFrame([_ev(400, 2, 11, 9.0)]), path)
-    day2_before = [(f, os.path.getmtime(f)) for f in _files_for_day(path, 2)]
+    _fragmented(spark, path, [_ev(300 + i, 1, 10, float(i)) for i in range(3)]
+                + [_ev(400, 2, 11, 9.0)])
+    day2_before = _stamped(_files_for_day(spark, path, 2))
 
-    n = compact_partitions(
+    tx_compact_partitions(
         spark, path, 1, predicate="event_date = DATE '2025-03-01'"
     )
-    assert n == 1
-    assert len(_files_for_day(path, 1)) == 1
-    assert [(f, os.path.getmtime(f))
-            for f in _files_for_day(path, 2)] == day2_before
+    assert len(_files_for_day(spark, path, 1)) == 1
+    assert _stamped(_files_for_day(spark, path, 2)) == day2_before
 
 
 def test_upsert_dedupes_duplicate_update_keys(spark, tmp_path):
     """MERGE contract: at most one source row per target key. A batch
     carrying the same key twice must collapse to the max-ts winner,
-    never insert N rows for the key (round-5 ADVICE defect)."""
+    never insert N rows for the key."""
     path = _store(spark, tmp_path)
     loser = _ev(2, 1, 11, 50.0)
     winner = Row(
@@ -133,14 +136,13 @@ def test_upsert_dedupes_duplicate_update_keys(spark, tmp_path):
         event_type="click",
         value=99.0,
     )
-    updates = spark.createDataFrame([loser, winner])
-    n = upsert_events(spark, path, updates)
-    assert n == 1  # only day 1 touched
+    tx_upsert_events(spark, path, spark.createDataFrame([loser, winner]))
 
-    rows = spark.read.parquet(path).where("event_id = 2").collect()
+    snap = tx_read_events(spark, path)
+    rows = snap.where("event_id = 2").collect()
     assert len(rows) == 1
     assert rows[0]["value"] == 99.0
-    assert spark.read.parquet(path).count() == 4  # 1,2,3,4 — no dup rows
+    assert snap.count() == 4  # 1,2,3,4 — no dup rows
 
 
 def test_upsert_dup_key_spanning_days(spark, tmp_path):
@@ -151,180 +153,85 @@ def test_upsert_dup_key_spanning_days(spark, tmp_path):
     path = _store(spark, tmp_path)
     loser = _ev(3, 2, 10, 50.0)  # key 3's old row lives on day 2
     winner = _ev(3, 4, 10, 77.0)  # winner moves the event to day 4
-    n = upsert_events(spark, path, spark.createDataFrame([loser, winner]))
-    assert n == 2  # days 2 and 4 rewritten
+    tx_upsert_events(spark, path, spark.createDataFrame([loser, winner]))
 
-    rows = spark.read.parquet(path).where("event_id = 3").collect()
+    snap = tx_read_events(spark, path)
+    rows = snap.where("event_id = 3").collect()
     assert len(rows) == 1
     assert rows[0]["value"] == 77.0
     assert str(rows[0]["event_date"]) == "2025-03-04"
-    assert spark.read.parquet(path).count() == 4
+    assert snap.count() == 4
+    assert _files_for_day(spark, path, 2) == []  # emptied day dropped
 
 
 def test_compaction_nonpartition_predicate_is_layout_only(spark, tmp_path):
     """A predicate on a NON-partition column selects which days get
-    compacted but must never delete the non-matching rows of those days
-    (round-5 ADVICE data-loss defect: the filtered frame was the frame
-    that got rewritten)."""
+    compacted but must never delete the non-matching rows of those
+    days."""
     path = str(tmp_path / "store")
-    for i in range(4):  # day 1: values 0..3 across 4 micro-batch files
-        write_events(
-            spark.createDataFrame([_ev(500 + i, 1, 10, float(i))]), path
-        )
-    write_events(spark.createDataFrame([_ev(600, 2, 11, 0.5)]), path)
-    before = {
-        (r["event_id"], r["value"])
-        for r in spark.read.parquet(path).collect()
-    }
-    day2_before = [(f, os.path.getmtime(f)) for f in _files_for_day(path, 2)]
+    _fragmented(spark, path, [_ev(500 + i, 1, 10, float(i)) for i in range(4)]
+                + [_ev(600, 2, 11, 0.5)])
+    before = _id_values(spark, path)
+    day2_before = _stamped(_files_for_day(spark, path, 2))
 
     # matches only value>2 rows, all on day 1 → compact day 1 ONLY,
     # but day 1 keeps ALL its rows (values 0..3)
-    n = compact_partitions(spark, path, 1, predicate="value > 2.0")
-    assert n == 1
-    assert len(_files_for_day(path, 1)) == 1
-    after = {
-        (r["event_id"], r["value"])
-        for r in spark.read.parquet(path).collect()
-    }
-    assert after == before
-    assert [(f, os.path.getmtime(f))
-            for f in _files_for_day(path, 2)] == day2_before
-
-
-def test_compact_store_delegates_and_splits(spark, tmp_path):
-    """compact_store is now a thin alias of compact_partitions: a
-    target > 1 must actually split a day into multiple files (the old
-    standalone body hashed on the day alone and never could)."""
-    from maillogsentinel_spark.sources.store import compact_store
-
-    path = str(tmp_path / "store")
-    write_events(
-        spark.createDataFrame([_ev(i, 1, i % 8, float(i)) for i in range(512)]),
-        path,
-        mode="overwrite",
-    )
-    n = compact_store(spark, path, target_files_per_partition=4)
-    assert n == 1
-    assert 2 <= len(_files_for_day(path, 1)) <= 4
-    assert spark.read.parquet(path).count() == 512
-
-
-def test_compaction_rerun_idempotent_after_partial_overwrite(spark, tmp_path):
-    """Crash-recovery statement test: dynamic partition overwrite
-    commits per partition, so a crash can leave day A compacted and day
-    B not. Simulate the half-done state (compact only day A via a
-    predicate), then re-run the full compaction — it must converge to
-    the same final state as a never-interrupted run: every day at the
-    target file count, data identical."""
-    path = str(tmp_path / "store")
-    for i in range(3):
-        write_events(
-            spark.createDataFrame([_ev(700 + i, 1, 10, float(i))]), path
-        )
-    for i in range(3):
-        write_events(
-            spark.createDataFrame([_ev(800 + i, 2, 11, float(i))]), path
-        )
-    before = {
-        (r["event_id"], r["value"])
-        for r in spark.read.parquet(path).collect()
-    }
-    # "crash" after day 1's partition committed, day 2 still fragmented
-    compact_partitions(spark, path, 1,
-                       predicate="event_date = DATE '2025-03-01'")
-    assert len(_files_for_day(path, 1)) == 1
-    assert len(_files_for_day(path, 2)) == 3
-    # recovery: re-run the full compaction
-    n = compact_partitions(spark, path, target_files_per_day=1)
-    assert n == 2
-    assert len(_files_for_day(path, 1)) == 1
-    assert len(_files_for_day(path, 2)) == 1
-    after = {
-        (r["event_id"], r["value"])
-        for r in spark.read.parquet(path).collect()
-    }
-    assert after == before
+    tx_compact_partitions(spark, path, 1, predicate="value > 2.0")
+    assert len(_files_for_day(spark, path, 1)) == 1
+    assert _id_values(spark, path) == before
+    assert _stamped(_files_for_day(spark, path, 2)) == day2_before
 
 
 def test_zordered_write_tightens_rowgroup_stats(spark, tmp_path):
-    """Row-group-level evidence via pyarrow: the z-ordered write's
+    """Row-group-level evidence via pyarrow: after OPTIMIZE ZORDER the
     parquet row groups carry tight user_id min/max boxes, while the
     arrival-order write's row groups each span ~the whole user domain
-    (arrival order is time order, so user_id is shuffled through every
-    row group). Tight boxes are what predicate pushdown prunes on."""
+    (user_id cycles 0..63 through every row group). Tight boxes are
+    what predicate pushdown prunes on. A small parquet block size puts
+    ~100 rows in each row group."""
     import pyarrow.parquet as pq
 
-    from maillogsentinel_spark.sources.store import write_events_zordered
-
-    rows = [
-        _ev(i, 1, i % 64, float(i)) for i in range(4096)
-    ]  # one day, user_id cycling 0..63 in arrival order
-    df = spark.createDataFrame(rows).coalesce(1)
-
-    zpath, apath = str(tmp_path / "z"), str(tmp_path / "a")
-    write_events_zordered(df, zpath)
-    write_events(df.withColumn("event_date", F.to_date("ts")).drop(
-        "event_date"), apath, mode="overwrite")
-
-    def rowgroup_spans(root, day="event_date=2025-03-01"):
+    def rowgroup_spans(files):
         spans = []
-        for f in glob.glob(os.path.join(root, day, "*.parquet")):
+        for f in files:
             md = pq.ParquetFile(f).metadata
             for rg in range(md.num_row_groups):
                 g = md.row_group(rg)
                 for c in range(g.num_columns):
                     col = g.column(c)
                     if col.path_in_schema == "user_id" and col.statistics:
-                        s = col.statistics
-                        spans.append(int(s.max) - int(s.min))
+                        spans.append(col.statistics.max - col.statistics.min)
         return spans
 
-    # Spark's default row groups are large, so 4096 rows may land in a
-    # single row group per file — the stats comparison only
-    # discriminates with >1 group; otherwise fall back to asserting the
-    # physical clustering directly.
-    zs, as_ = rowgroup_spans(zpath), rowgroup_spans(apath)
-    assert zs and as_
-    if len(zs) > 1 or len(as_) > 1:
-        assert sum(zs) / len(zs) < sum(as_) / len(as_)
-    else:
-        # single row group each: verify ordering instead — the z file's
-        # first/last pages follow z order (user_id clustered), i.e. the
-        # column is NOT in arrival order
-        import pyarrow.parquet as pq2
-
-        t = pq2.read_table(
-            glob.glob(os.path.join(zpath, "event_date=2025-03-01",
-                                   "*.parquet"))[0]
-        )
-        u = t.column("user_id").to_pylist()
-        arrival = [r.user_id for r in rows]
-        assert u != arrival
-        # clustered: average absolute step between neighbors is far
-        # smaller than the arrival-order cycling (which steps by 1 but
-        # wraps 63->0 every 64 rows; z order groups equal users)
-        runs = sum(1 for i in range(1, len(u)) if u[i] != u[i - 1])
-        runs_arrival = sum(
-            1 for i in range(1, len(arrival)) if arrival[i] != arrival[i - 1]
-        )
-        assert runs < runs_arrival / 10
+    path = str(tmp_path / "store")
+    df = spark.createDataFrame(
+        [_ev(i, 1, i % 64, float(i)) for i in range(4096)]
+    ).coalesce(1)
+    spark.conf.set("parquet.block.size", "4096")
+    try:
+        tx_write_events(spark, path, df)
+        arrival = rowgroup_spans(_files_for_day(spark, path, 1))
+        before = _id_values(spark, path)
+        tx_optimize_zorder(spark, path, dims=("user_id", "ts"))
+        zs = rowgroup_spans(_files_for_day(spark, path, 1))
+    finally:
+        spark.conf.unset("parquet.block.size")
+    assert len(arrival) > 1 and len(zs) > 1
+    assert _id_values(spark, path) == before  # layout-only
+    assert sum(zs) / len(zs) < (sum(arrival) / len(arrival)) / 10
 
 
 def test_compaction_can_split_a_day(spark, tmp_path):
     """target_files_per_day > 1 must be able to SPLIT a day — hashing
     on the day column alone never could (regression for the salt)."""
     path = str(tmp_path / "store")
-    write_events(
+    tx_write_events(
+        spark, path,
         spark.createDataFrame([_ev(i, 1, i % 8, float(i)) for i in range(512)]),
-        path,
-        mode="overwrite",
     )
-    n = compact_partitions(spark, path, target_files_per_day=4)
-    assert n == 1
-    files = _files_for_day(path, 1)
-    assert 2 <= len(files) <= 4
-    assert spark.read.parquet(path).count() == 512
+    tx_compact_partitions(spark, path, target_files_per_day=4)
+    assert 2 <= len(_files_for_day(spark, path, 1)) <= 4
+    assert tx_read_events(spark, path).count() == 512
 
 
 def _map_ev(eid, day, props):
@@ -338,21 +245,19 @@ def _map_ev(eid, day, props):
 def test_upsert_tolerates_nested_map_columns(spark, tmp_path):
     """Nested maps (array<map>) are as unorderable as top-level maps —
     the dedupe tie-break must skip them instead of throwing at analysis
-    time (regression for the round-7 ADVICE finding)."""
+    time."""
     path = str(tmp_path / "store")
-    write_events(
+    tx_write_events(
+        spark, path,
         spark.createDataFrame([_map_ev(1, 1, "a"), _map_ev(2, 2, "b")]),
-        path,
-        mode="overwrite",
     )
     # duplicate key in the batch exercises the tie-break window
-    n = upsert_events(
+    tx_upsert_events(
         spark,
         path,
         spark.createDataFrame([_map_ev(1, 1, "x"), _map_ev(1, 1, "y")]),
     )
-    assert n == 1
-    rows = spark.read.parquet(path).orderBy("event_id").collect()
+    rows = tx_read_events(spark, path).orderBy("event_id").collect()
     assert [r.event_id for r in rows] == [1, 2]
     assert rows[0].tags[0]["k"] in ("x", "y")
 
@@ -370,11 +275,12 @@ def test_compaction_tolerates_map_only_schema(spark, tmp_path):
             )
             for i in range(64)
         ]
-    ).withColumn("event_date", F.to_date("ts"))
-    for chunk in range(4):  # several small files to compact
-        df.where(F.minute("ts") % 4 == chunk).write.mode("append").partitionBy(
-            "event_date"
-        ).parquet(path)
-    assert compact_partitions(spark, path, target_files_per_day=1) == 1
-    assert len(_files_for_day(path, 1)) == 1
-    assert spark.read.parquet(path).count() == 64
+    )
+    chunks = [df.where(F.minute("ts") % 4 == c) for c in range(4)]
+    tx_write_events(spark, path, chunks[0])
+    for chunk in chunks[1:]:  # several small files to compact
+        tx_append_events(spark, path, chunk)
+    assert len(_files_for_day(spark, path, 1)) >= 4
+    tx_compact_partitions(spark, path, target_files_per_day=1)
+    assert len(_files_for_day(spark, path, 1)) == 1
+    assert tx_read_events(spark, path).count() == 64

@@ -1390,3 +1390,16 @@ def test_local_metadata_fast_path_gated_on_default_fs(spark, tmp_path):
     tx_write_events(spark, store, spark.createDataFrame(
         [_ev(1, 1, 1, 1.0), _ev(2, 1, 2, 2.0)]))
     assert tx_read_events(spark, store).count() == 2
+
+
+@pytest.mark.parametrize(
+    "uri, local",
+    [
+        ("file:/data/store", "/data/store"),
+        ("file:///data/store", "/data/store"),
+        ("file://host/data/store", None),  # names a host: Hadoop route
+    ],
+)
+def test_local_root_file_uri_forms(uri, local):
+    # file: URIs never consult the session's defaultFS
+    assert txstore._local_root(None, uri) == local
